@@ -20,6 +20,8 @@ from itertools import combinations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .vocab import vocab_frame
+
 __all__ = ["umass_coherence"]
 
 
@@ -42,7 +44,7 @@ def umass_coherence(
     vocab = sorted({w for _, _, w in tw})
     spark = corpus.sparkSession
     vocab_df = F.broadcast(
-        spark.createDataFrame([(w,) for w in vocab], f"{word_col} string")
+        vocab_frame(spark, vocab).select(F.col("word").alias(word_col))
     )
     # One filtered pass: per doc, the set of top-words it contains.
     doc_words = (

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from . import kernel
 from .corpus import pack_docs
 from .model import LDAModel
-from .vocab import remap_words
+from .vocab import remap_words, vocab_frame
 
 __all__ = [
     "transform",
@@ -89,10 +89,9 @@ def transform(
         total_tokens = int(corpus.agg(F.sum("count")).collect()[0][0] or 0)
         P = _auto_partitions(total_tokens, sc.defaultParallelism)
 
-    vocab = spark.createDataFrame(
-        [(w, i) for i, w in enumerate(model.words)], "word string, word_id long"
+    corpus_ids = remap_words(corpus, vocab_frame(spark, model.words)).select(
+        "doc_id", "word_id", "count"
     )
-    corpus_ids = remap_words(corpus, vocab).select("doc_id", "word_id", "count")
     packed = pack_docs(corpus_ids, P)
 
     bc_nwk = sc.broadcast(model.nwk.astype(np.float64))
@@ -278,11 +277,16 @@ def write_inference_result(result: DataFrame, path: str, single_file: bool = Fal
     """Text-format parity with ``infer.cc:94-98``: one line per doc, K
     space-separated averaged topic counts, in doc order.
 
-    ``single_file=True`` streams lines through the driver into one plain
-    file (the reference's single-process writer shape — used by the
-    CLI); the default writes a Spark text directory (the scale path).
+    ``single_file=True`` collects ``(doc_id, line)`` pairs once, orders
+    them on the driver and writes one plain file (the reference's
+    single-process writer shape — used by the CLI); the default sorts
+    the lines inside one partition and writes a Spark text directory of
+    one part file.  Neither samples for range bounds as a global
+    ``orderBy`` would, which runs the whole inference plan (read, remap,
+    pack, Gibbs sweeps) an extra time.
     """
-    lines = result.orderBy("doc_id").select(
+    lines = result.select(
+        "doc_id",
         F.array_join(
             F.transform(
                 "topic_weights",
@@ -294,11 +298,17 @@ def write_inference_result(result: DataFrame, path: str, single_file: bool = Fal
                 ).otherwise(F.format_string("%.6f", v)),
             ),
             " ",
-        ).alias("value")
+        ).alias("value"),
     )
     if single_file:
+        rows = sorted(lines.collect(), key=lambda r: r["doc_id"])
         with open(path, "w", encoding="utf-8") as f:
-            for row in lines.toLocalIterator():
-                f.write(row["value"] + "\n")
+            f.writelines(r["value"] + "\n" for r in rows)
     else:
-        lines.coalesce(1).write.mode("overwrite").text(path)
+        (
+            lines.repartition(1)
+            .sortWithinPartitions("doc_id")
+            .select("value")
+            .write.mode("overwrite")
+            .text(path)
+        )

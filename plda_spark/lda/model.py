@@ -23,16 +23,6 @@ from pyspark.sql import functions as F
 __all__ = ["LDAModel"]
 
 
-def _format_count(v, as_float: bool) -> str:
-    """C++ stream formatting parity: an int64 count streams as an
-    integer; a double streams via ``operator<<(double)`` — 6 significant
-    digits INCLUDING for integral values (``2500000.0`` prints as
-    ``2.5e+06``, not ``2500000``), which ``%g`` reproduces."""
-    if not as_float:
-        return str(int(v))
-    return f"{float(v):g}"
-
-
 class LDAModel:
     """Word-topic model with the reference's count semantics.
 
@@ -65,12 +55,18 @@ class LDAModel:
 
     # -- text serde (format parity) -------------------------------------------
     def save_text(self, path: str) -> None:
-        """``word \\t c1 c2 … cK`` one line per word (model.cc:98-111)."""
-        as_float = self.nwk.dtype.kind == "f"
+        """``word \\t c1 c2 … cK`` one line per word (model.cc:98-111).
+
+        C++ stream formatting parity: an int64 count streams as an
+        integer; a double streams via ``operator<<(double)`` — 6
+        significant digits INCLUDING for integral values (``2500000.0``
+        prints as ``2.5e+06``, not ``2500000``), which ``%g`` reproduces."""
+        fmt = "{:g}".format if self.nwk.dtype.kind == "f" else str
         with open(path, "w", encoding="utf-8") as f:
-            for i, w in enumerate(self.words):
-                counts = " ".join(_format_count(v, as_float) for v in self.nwk[i])
-                f.write(f"{w}\t{counts}\n")
+            f.writelines(
+                f"{w}\t{' '.join(map(fmt, row))}\n"
+                for w, row in zip(self.words, self.nwk.tolist())
+            )
 
     @classmethod
     def load_text(cls, path: str, alpha: float = 0.1, beta: float = 0.01) -> "LDAModel":
@@ -78,23 +74,32 @@ class LDAModel:
         line-order word ids, double-parse then int64-truncate, skip
         blank/``#`` lines, K inferred from the first line."""
         words: list[str] = []
-        rows: list[list[int]] = []
+        widths: list[int] = []
+        tokens: list[str] = []
         with open(path, encoding="utf-8") as f:
             for line in f:
-                if not line.strip() or line.lstrip().startswith("#") or line[0] in "\r\n":
+                if not line.strip() or line.lstrip().startswith("#"):
                     continue
                 parts = line.split()
                 words.append(parts[0])
-                rows.append([int(float(x)) for x in parts[1:]])
-        if not rows:
+                widths.append(len(parts) - 1)
+                tokens.extend(parts[1:])
+        if not words:
             raise ValueError(f"{path}: no model lines (empty or all comments)")
-        widths = {len(r) for r in rows}
-        if len(widths) != 1 or 0 in widths:
+        # every count of the file in one parse (float()'s grammar: a
+        # non-numeric token raises ValueError)
+        counts = np.array(tokens, dtype=np.float64)
+        distinct = set(widths)
+        if len(distinct) != 1 or 0 in distinct:
             raise ValueError(
-                f"{path}: ragged model file — per-line count columns {sorted(widths)} "
+                f"{path}: ragged model file — per-line count columns {sorted(distinct)} "
                 "(truncated write?); every line must carry the same K counts"
             )
-        nwk = np.asarray(rows, dtype=np.int64)
+        # int64 truncation wraps silently outside [-2^63, 2^63) and on
+        # NaN/inf — refuse those instead
+        if not ((counts >= -(2.0**63)) & (counts < 2.0**63)).all():
+            raise ValueError(f"{path}: non-finite or out-of-int64-range model count")
+        nwk = counts.astype(np.int64).reshape(len(words), widths[0])
         return cls(nwk, words, alpha, beta)
 
     # -- Spark-native forms ----------------------------------------------------

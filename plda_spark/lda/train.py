@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from . import kernel
 from .corpus import pack_docs
 from .model import LDAModel
-from .vocab import remap_words
+from .vocab import remap_words, vocab_frame
 
 __all__ = ["TrainConfig", "TrainResult", "train", "train_documents"]
 
@@ -954,9 +954,7 @@ def _train_join(
         V, K = len(words), config.num_topics
         if V == 0:
             raise ValueError("empty vocabulary")
-        vocab = spark.createDataFrame(
-            [(w, i) for i, w in enumerate(words)], "word string, word_id long"
-        )
+        vocab = vocab_frame(spark, words)
         if total_tokens is None and config.join_exchange == "auto":
             total_tokens = int(corpus.agg(F.sum("count")).collect()[0][0] or 0)
         exch = _resolve_join_exchange(config, V, total_tokens or 0, P)
@@ -1231,9 +1229,7 @@ def train(corpus: DataFrame, config: TrainConfig, resume_from: str | None = None
         V, K = len(words), config.num_topics
         if V == 0:
             raise ValueError("empty vocabulary")
-        vocab = spark.createDataFrame(
-            [(w, i) for i, w in enumerate(words)], "word string, word_id long"
-        )
+        vocab = vocab_frame(spark, words)
 
         corpus_ids = remap_words(corpus, vocab).select("doc_id", "word_id", "count")
         packed = pack_docs(corpus_ids, P)

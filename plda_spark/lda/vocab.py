@@ -12,10 +12,22 @@ so the corpus itself never shuffles for id assignment.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pandas as pd
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["build_vocab", "remap_words"]
+__all__ = ["build_vocab", "remap_words", "vocab_frame"]
+
+
+def vocab_frame(spark: SparkSession, words: list[str]) -> DataFrame:
+    """``DataFrame[word, word_id]`` from a driver-side word list, with
+    ``word_id`` = list position.  Built from a pandas frame, so the rows
+    cross to the JVM as one Arrow batch instead of one pickled tuple
+    per word."""
+    pdf = pd.DataFrame({"word": words, "word_id": np.arange(len(words), dtype=np.int64)})
+    return spark.createDataFrame(pdf, "word string, word_id long")
 
 
 def build_vocab(corpus: DataFrame, word_col: str = "word") -> DataFrame:

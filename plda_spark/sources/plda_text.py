@@ -5,25 +5,50 @@ Format (``README.md:44-58``): one document per line,
 lines starting with ``#``/CR/LF are skipped (parser ``lda.cc:56-79``).
 
 Doc ids are assigned by line order, matching the reference's implicit
-line-number document identity.  ``zipWithIndex`` is the one RDD touch in
-the repo: it is the only distributed primitive that yields stable,
-contiguous line numbers without collapsing to a single partition.
+line-number document identity.  :func:`with_line_ids` numbers the kept
+lines in JVM expressions, so no line passes through a Python worker.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-__all__ = ["read_plda_corpus", "write_plda_corpus"]
+__all__ = ["read_plda_corpus", "write_plda_corpus", "with_line_ids"]
 
-_LINE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("line", T.StringType()),
-    ]
-)
+# monotonically_increasing_id() = partition index << 33 | row in partition
+_ROW_BITS = 33
+
+
+def with_line_ids(df: DataFrame, id_col: str) -> DataFrame:
+    """``df`` plus a dense 0-based ``id_col`` in line order: partition
+    order, then row order within each partition — exactly the ids of
+    ``df.rdd.zipWithIndex()``.
+
+    The row's place in its partition comes from
+    ``monotonically_increasing_id()``; each partition's offset is the
+    prefix sum of the partition row counts, taken by one aggregation
+    that runs only when there is more than one partition (as
+    ``zipWithIndex``'s count job does).  A file scan reads each split in
+    the same order every time, so a recomputed partition gets the same
+    ids.
+    """
+    n_parts = df.rdd.getNumPartitions()
+    offsets = [0] * n_parts
+    if n_parts > 1:
+        counts = dict(
+            df.groupBy(F.spark_partition_id().alias("pid")).count().collect()
+        )
+        for p in range(1, n_parts):
+            offsets[p] = offsets[p - 1] + counts.get(p - 1, 0)
+    mid = F.col("__mid")
+    pid = F.shiftright(mid, _ROW_BITS).cast("int")
+    row = mid.bitwiseAND((1 << _ROW_BITS) - 1)
+    return (
+        df.withColumn("__mid", F.monotonically_increasing_id())
+        .withColumn(id_col, F.get(F.lit(offsets).cast("array<long>"), pid) + row)
+        .drop("__mid")
+    )
 
 
 def read_plda_corpus(spark: SparkSession, path: str) -> DataFrame:
@@ -31,12 +56,9 @@ def read_plda_corpus(spark: SparkSession, path: str) -> DataFrame:
     lines = spark.read.text(path)
     kept = lines.where(
         (F.length(F.trim("value")) > 0) & ~F.col("value").startswith("#")
-    )
+    ).select(F.col("value").alias("line"))
     # Stable line-order ids (lda.cc assigns doc identity by input order).
-    indexed = kept.rdd.map(lambda r: r["value"]).zipWithIndex().map(
-        lambda t: (t[1], t[0])
-    )
-    df = spark.createDataFrame(indexed, _LINE_SCHEMA)
+    df = with_line_ids(kept, "doc_id")
     tokens = F.split(F.trim("line"), r"\s+")
     # (word, count) pairs: even positions are words, odd are counts.
     pairs = F.filter(

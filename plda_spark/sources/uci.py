@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .plda_text import with_line_ids, write_plda_corpus
+
 __all__ = ["read_uci_docword", "uci_to_corpus"]
 
 
@@ -24,12 +26,12 @@ def read_uci_docword(spark: SparkSession, docword_path: str, vocab_path: str) ->
         (F.col("b") - 1).alias("word_id"),
         F.col("c").alias("count"),
     )
-    vocab_lines = spark.read.text(vocab_path)
-    vocab = (
-        vocab_lines.rdd.map(lambda r: r["value"].strip())
-        .zipWithIndex()
-        .toDF(["word", "word_id"])
+    # word_id = line number; the trim is Python's str.strip(): Unicode
+    # white space plus the \x1c-\x1f separators
+    words = spark.read.text(vocab_path).select(
+        F.regexp_replace("value", r"(?U)^[\s\x1c-\x1f]+|[\s\x1c-\x1f]+$", "").alias("word")
     )
+    vocab = with_line_ids(words, "word_id")
     return (
         triples.join(F.broadcast(vocab), "word_id")
         .select("doc_id", "word", "count")
@@ -38,6 +40,4 @@ def read_uci_docword(spark: SparkSession, docword_path: str, vocab_path: str) ->
 
 def uci_to_corpus(spark: SparkSession, docword_path: str, vocab_path: str, out_path: str) -> None:
     """Full O20 conversion: UCI pair → plda-format text file."""
-    from .plda_text import write_plda_corpus
-
     write_plda_corpus(read_uci_docword(spark, docword_path, vocab_path), out_path)

@@ -67,6 +67,42 @@ def test_model_text_serde_parity(tmp_path):
     assert out.read_text() == "zebra\t3 2 1\napple\t0 5 4\n"
 
 
+def test_model_text_float_format_and_bad_files(tmp_path):
+    """Averaged (float64) models stream like C++ ``operator<<(double)``;
+    ragged, empty, non-numeric and non-finite/out-of-range counts raise
+    instead of loading (or wrapping) silently."""
+    out = tmp_path / "avg.txt"
+    LDAModel(np.array([[2500000.0, 0.5], [1.0, 1 / 3]]), ["a", "b"]).save_text(str(out))
+    assert out.read_text() == "a\t2.5e+06 0.5\nb\t1 0.333333\n"
+    assert LDAModel.load_text(str(out)).nwk.tolist() == [[2500000, 0], [1, 0]]
+    # per-value loop reference of the writer and the reader
+    rng = np.random.default_rng(4)
+    words = [f"w{i}" for i in range(50)]
+    for nwk in (rng.integers(0, 10**12, (50, 7)), rng.gamma(0.3, 1e4, (50, 7))):
+        fmt = (lambda v: f"{float(v):g}") if nwk.dtype.kind == "f" else (lambda v: str(int(v)))
+        LDAModel(nwk, words).save_text(str(out))
+        text = out.read_text()
+        assert text == "".join(
+            f"{w}\t{' '.join(fmt(v) for v in row)}\n" for w, row in zip(words, nwk)
+        )
+        ref = [[int(float(x)) for x in line.split()[1:]] for line in text.splitlines()]
+        assert LDAModel.load_text(str(out)).nwk.tolist() == ref
+    bad = {
+        "ragged": ("a\t1 2\nb\t3\n", "ragged"),
+        "no_counts": ("a\nb\n", "ragged"),
+        "empty": ("# only\n\n", "no model lines"),
+        "word": ("a\t1 x\n", "could not convert"),
+        "nan": ("a\t1 nan\n", "non-finite"),
+        "inf": ("a\t-inf 1\n", "non-finite"),
+        "huge": ("a\t1 1e19\n", "out-of-int64-range"),
+    }
+    for name, (text, msg) in bad.items():
+        p = tmp_path / f"{name}.txt"
+        p.write_text(text)
+        with pytest.raises(ValueError, match=msg):
+            LDAModel.load_text(str(p))
+
+
 def test_model_parquet_roundtrip(spark, tmp_path):
     nwk = np.array([[1.5, 2.0], [3.0, 4.25]])
     m = LDAModel(nwk, ["aa", "bb"], alpha=0.2, beta=0.05)
@@ -231,6 +267,66 @@ def test_plda_reader_tolerates_malformed_counts(spark, tmp_path):
         for r in read_plda_corpus(spark, str(p)).collect()
     }
     assert got == {(0, "good"): 2, (0, "fine"): 1, (3, "ok"): 1, (3, "tail"): 4}
+
+
+def _kept_lines(spark, path):
+    """The lines read_plda_corpus keeps, as a one-column frame."""
+    return spark.read.text(path).where(
+        (F.length(F.trim("value")) > 0) & ~F.col("value").startswith("#")
+    )
+
+
+def _line_of_doc(corpus):
+    """doc_id → the line's ``f…`` key word (one per line below)."""
+    return {r["doc_id"]: r["word"] for r in corpus.where(F.col("word").startswith("f")).collect()}
+
+
+def test_plda_reader_ids_match_zip_with_index(spark, tmp_path):
+    """Doc ids are dense line-order ids equal to ``zipWithIndex`` over the
+    kept lines, on a corpus that reads as several partitions (with
+    comments, blank lines and a file of comments only)."""
+    d = tmp_path / "corpus"
+    d.mkdir()
+    for i in range(3):
+        (d / f"part{i}.txt").write_text(
+            "# header\n"
+            + "".join(
+                "\n" if j % 5 == 2 else f"# note {j}\n" if j % 5 == 4 else f"f{i}l{j} 1 common 2\n"
+                for j in range(12 + 4 * i)
+            )
+        )
+    (d / "part9.txt").write_text("# only\n\n# comments\n")
+    kept = _kept_lines(spark, str(d))
+    assert kept.rdd.getNumPartitions() >= 3
+    oracle = {
+        i: line.split()[0]
+        for line, i in kept.rdd.map(lambda r: r["value"]).zipWithIndex().collect()
+    }
+    got = _line_of_doc(read_plda_corpus(spark, str(d)))
+    assert sorted(got) == list(range(len(oracle))) and got == oracle
+
+
+def test_plda_reader_ids_single_partition_and_all_comments(spark, tmp_path):
+    one = tmp_path / "one.txt"
+    one.write_text("f0 1\n# c\n\nf1 2 x 1\n  \nf2 3\n")
+    assert _kept_lines(spark, str(one)).rdd.getNumPartitions() == 1
+    assert _line_of_doc(read_plda_corpus(spark, str(one))) == {0: "f0", 1: "f1", 2: "f2"}
+    comments = tmp_path / "comments.txt"
+    comments.write_text("# only\n\n# comments\n")
+    empty = read_plda_corpus(spark, str(comments))
+    assert empty.columns == ["doc_id", "word", "count"] and empty.collect() == []
+
+
+def test_uci_vocab_ids_are_stripped_line_numbers(spark, tmp_path):
+    """word_id is the vocab line number; words are whitespace-stripped
+    (tabs and non-breaking spaces too) and blank lines keep their id."""
+    (tmp_path / "docword.txt").write_text("2\n4\n3\n1 1 2\n1 4 1\n2 2 5\n")
+    (tmp_path / "vocab.txt").write_text(" alpha\t\nbeta\u00a0\n\ndelta  \n")
+    rows = read_uci_docword(
+        spark, str(tmp_path / "docword.txt"), str(tmp_path / "vocab.txt")
+    ).collect()
+    got = {(r["doc_id"], r["word"], r["count"]) for r in rows}
+    assert got == {(0, "alpha", 2), (0, "delta", 1), (1, "beta", 5)}
 
 
 def test_zorder_value_interleaves_bits(spark):

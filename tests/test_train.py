@@ -1,5 +1,8 @@
 """End-to-end LDA training tests (SURVEY.md §5.2-3/4)."""
 
+import glob
+import hashlib
+
 import numpy as np
 import pytest
 
@@ -145,6 +148,82 @@ def test_infer_model_df_matches_broadcast(spark, tiny_result):
         # Same total mass (OOV dropped identically) and same argmax topic.
         assert df_rows[d].sum() == pytest.approx(bc_rows[d].sum())
         assert int(df_rows[d].argmax()) == int(bc_rows[d].argmax())
+
+
+def _infer_and_write(spark, tmp_path, single_file):
+    """read → ``transform`` → ``write_inference_result`` on a held-out
+    corpus file against a fixed model.  The transform and the write run
+    under one job group; returns (jobs in the group, rows through the
+    sweep, written lines, θ rows in doc_id order).  One input file reads
+    as one partition on any core count, so θ does not depend on it."""
+    from plda_spark.lda import infer
+    from plda_spark.lda.model import LDAModel
+    from plda_spark.sources import read_plda_corpus
+
+    rng = np.random.default_rng(17)
+    words = [f"w{i:03d}" for i in range(30)]
+    model = LDAModel(rng.integers(0, 40, size=(30, 3)), words)
+    docs = [
+        " ".join(f"{w} {rng.integers(1, 6)}" for w in rng.choice(words, 4, replace=False))
+        for _ in range(30)
+    ]
+    # an all-OOV doc drops out before the sweep (infer.cc:77-80)
+    src = tmp_path / f"heldout-{single_file}.txt"
+    src.write_text("\n".join(docs[:12] + ["oov_only 3"] + docs[12:]) + "\n")
+    corpus = read_plda_corpus(spark, str(src))
+
+    sc = spark.sparkContext
+    swept = sc.accumulator(0)
+
+    def count_rows(batches):
+        for b in batches:
+            swept.add(len(b))
+            yield b
+
+    out = str(tmp_path / f"theta-{single_file}")
+    group = f"infer-write-{single_file}"
+    sc.setJobGroup(group, "transform + write_inference_result")
+    try:
+        theta = infer.transform(
+            model, corpus, total_iterations=8, burn_in_iterations=3, seed=5,
+            num_partitions=3,
+        )
+        infer.write_inference_result(
+            theta.mapInPandas(count_rows, theta.schema), out, single_file=single_file
+        )
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    if single_file:
+        text = open(out, encoding="utf-8").read()
+    else:
+        (part,) = glob.glob(f"{out}/part-*")
+        text = open(part, encoding="utf-8").read()
+    by_doc = sorted(theta.collect(), key=lambda r: r["doc_id"])
+    return jobs, swept.value, text, [r["topic_weights"] for r in by_doc]
+
+
+# θ file of _infer_and_write, and the jobs its transform + write fired,
+# before the write sorted in one partition (a global orderBy re-ran the
+# whole inference plan for its range-bound sample).
+_THETA_SHA256 = "26bfd93c133cf6235a812969fc6f09c821f06cd501a0b08407cc552bbe15b9d5"
+_JOBS_BEFORE = {True: 6, False: 6}
+
+
+@pytest.mark.parametrize("single_file", [True, False], ids=["single_file", "directory"])
+def test_inference_write_runs_sweep_once(spark, tmp_path, single_file):
+    jobs, swept, text, weights = _infer_and_write(spark, tmp_path, single_file)
+    lines = text.splitlines()
+    assert len(lines) == len(weights) == 30
+    # every doc crosses the sweep once: no second pass of the plan
+    assert swept == len(lines)
+    assert jobs <= _JOBS_BEFORE[single_file]
+    # one line per doc in doc_id order, formatted as infer.cc:94-98
+    for line, w in zip(lines, weights):
+        assert np.allclose([float(x) for x in line.split()], w, atol=5e-7)
+    # both modes write the same bytes, identical to the earlier writer
+    assert hashlib.sha256(text.encode()).hexdigest() == _THETA_SHA256
 
 
 def test_describe_topics(spark, tiny_result):
